@@ -5,6 +5,25 @@ on a multi-executor cluster unchanged: AQE on (runtime re-planning,
 skew-join handling, dynamic coalescing), Arrow on (fast
 Python<->JVM), and a shuffle-partition count that AQE is free to
 shrink.
+
+On a ``local`` master, Python tasks are forked from the engine's worker
+daemon (:mod:`cae_polars_tools_spark.worker_daemon`). PySpark invalidates
+the import caches at the start of every task, and on CPython 3.11 that
+makes each worker re-read the central directory of ``pyspark.zip`` once
+per cached zip importer, a fixed charge on every scan window, data-source
+read and pandas UDF that can outweigh the task's own work. The daemon
+re-reads an archive only when it has changed on disk; files shipped with
+``addFile``/``addPyFile`` are found as before. Spark has no fallback if
+the daemon module cannot be imported when the daemon starts, so the
+session also puts the directory holding this package on the executors'
+``PYTHONPATH`` (local executors share the driver's file system). Opt out
+with ``extra_conf={"spark.python.daemon.module": "pyspark.daemon"}``.
+Other masters keep ``pyspark.daemon``: executors there may receive the
+engine only through ``--py-files``/``addPyFile``, which PySpark adds to
+``sys.path`` per task, after the daemon has started. Where the package
+is installed on every executor, opt in with
+``extra_conf={"spark.python.daemon.module":
+"cae_polars_tools_spark.worker_daemon"}``.
 """
 
 from __future__ import annotations
@@ -12,6 +31,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+_DAEMON_MODULE = "cae_polars_tools_spark.worker_daemon"
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -36,13 +58,13 @@ def get_spark(
     if shuffle_partitions is None:
         shuffle_partitions = cpus
 
+    if master is None and not os.environ.get("SPARK_MASTER") and "spark.master" not in (
+        os.environ.get("SPARK_CONF", "")
+    ):
+        master = f"local[{cpus}]"
     builder = SparkSession.builder.appName(app_name)
     if master is not None:
         builder = builder.master(master)
-    elif not os.environ.get("SPARK_MASTER") and "spark.master" not in os.environ.get(
-        "SPARK_CONF", ""
-    ):
-        builder = builder.master(f"local[{cpus}]")
 
     conf = {
         # Adaptive execution: runtime shuffle coalescing, skew-join
@@ -56,10 +78,8 @@ def get_spark(
         # Pin Python worker reuse (Spark's default, but a misconfigured
         # cluster losing it would bill a fork+import to EVERY pandas-UDF
         # stage and Python Data Source planning round — the fixed
-        # overhead that dominates small scans) and never idle-kill the
-        # daemon's pooled workers between queries of one session.
+        # overhead that dominates small scans).
         "spark.python.worker.reuse": "true",
-        "spark.python.worker.idleTimeoutSeconds": "0",
         # Let the zarr data source consume coordinate predicates
         # (ZarrScanReader.pushFilters → chunk pruning at the store).
         "spark.sql.python.filterPushdown.enabled": "true",
@@ -113,8 +133,19 @@ def get_spark(
         # residue drifted later rounds upward on a 4g heap.)
         "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "6g"),
     }
+    if master is not None and master.startswith("local"):
+        # Fork workers from the engine's daemon, which stops every task
+        # re-reading pyspark.zip (see the module docstring).
+        conf["spark.python.daemon.module"] = _DAEMON_MODULE
     if extra_conf:
         conf.update(extra_conf)
+    if conf.get("spark.python.daemon.module") == _DAEMON_MODULE:
+        # The daemon starts before any per-task sys.path entry exists, so
+        # make the package importable even when the driver found it only
+        # through its own sys.path. Spark merges this into the daemon's
+        # PYTHONPATH; a caller's entries are kept after it.
+        paths = [_PACKAGE_PARENT, conf.get("spark.executorEnv.PYTHONPATH", "")]
+        conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(p for p in paths if p)
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
